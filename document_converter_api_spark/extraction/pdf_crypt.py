@@ -19,11 +19,15 @@ exactly that case:
 * per-object keys (Algorithm 1; V=5 uses the file key directly) and
   RC4 / AES-CBC stream decryption.
 
-All cipher primitives are self-contained pure Python (RC4 is ~10 lines;
-AES-128/256 is the textbook FIPS-197 cipher with both directions, the
-forward direction existing so tests can build real encrypted fixtures and
-prove a round trip rather than pinning canned bytes). Pure Python; no
-Spark imports; no third-party crypto.
+AES-128/256 CBC comes from the ``cryptography`` package (OpenSSL), an
+executor-side requirement like ``pyarrow``; both directions are exposed,
+the forward one so tests can build real encrypted fixtures and prove a
+round trip rather than pinning canned bytes. RC4 stays a ~15-line pure
+Python function: ``cryptography``'s ARC4 accepts only 40/56/64/80/128-bit
+keys, while ISO 32000 allows any /Length from 40 to 128 bits in steps of
+8, and per-object keys are the file key plus 5 bytes (11 bytes for
+/Length 48).
+No Spark imports.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ from __future__ import annotations
 import functools as _functools
 import hashlib
 import struct
+
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 # ISO 32000-1 Table 21 padding string (Algorithm 2 step a)
 PAD = bytes([
@@ -63,175 +69,10 @@ def rc4(key: bytes, data: bytes) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# AES-128 (FIPS-197), CBC mode — decrypt for the extractor, encrypt so the
-# test fixtures can produce REAL AESV2 files
+# AES-128/256, CBC mode (OpenSSL via ``cryptography``) — decrypt for the
+# extractor, encrypt so the test fixtures can produce REAL AESV2/AESV3 files.
+# An unsupported key length raises ValueError from ``algorithms.AES``.
 # ---------------------------------------------------------------------------
-
-_SBOX = bytes.fromhex(
-    "637c777bf26b6fc53001672bfed7ab76ca82c97dfa5947f0add4a2af9ca472c0"
-    "b7fd9326363ff7cc34a5e5f171d8311504c723c31896059a071280e2eb27b275"
-    "09832c1a1b6e5aa0523bd6b329e32f8453d100ed20fcb15b6acbbe394a4c58cf"
-    "d0efaafb434d338545f9027f503c9fa851a3408f929d38f5bcb6da2110fff3d2"
-    "cd0c13ec5f974417c4a77e3d645d197360814fdc222a908846eeb814de5e0bdb"
-    "e0323a0a4906245cc2d3ac629195e479e7c8376d8dd54ea96c56f4ea657aae08"
-    "ba78252e1ca6b4c6e8dd741f4bbd8b8a703eb5664803f60e613557b986c11d9e"
-    "e1f8981169d98e949b1e87e9ce5528df8ca1890dbfe6426841992d0fb054bb16")
-_INV_SBOX = bytearray(256)
-for _i, _v in enumerate(_SBOX):
-    _INV_SBOX[_v] = _i
-_INV_SBOX = bytes(_INV_SBOX)
-_RCON = (0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36)
-
-
-def _xtime(a: int) -> int:
-    a <<= 1
-    return (a ^ 0x1B) & 0xFF if a & 0x100 else a
-
-
-def _mul(a: int, b: int) -> int:
-    out = 0
-    while b:
-        if b & 1:
-            out ^= a
-        a = _xtime(a)
-        b >>= 1
-    return out
-
-
-# GF(2^8) multiplication as 256-entry lookup tables for the MixColumns
-# constants — the bit-loop _mul in the per-block hot path made encrypted
-# PDFs ~30x slower per doc than plaintext ones; tables built once via the
-# reference _mul (which stays as the spec/test twin).
-_MUL = {c: bytes(_mul(x, c) for x in range(256))
-        for c in (1, 2, 3, 9, 11, 13, 14)}
-
-# 32-bit encryption T-tables (the classic Rijndael word-oriented
-# formulation): each round becomes 16 table lookups + 16 XORs over four
-# column words instead of per-byte SubBytes/ShiftRows/MixColumns passes.
-# Round 4 added AES-256 R6, whose Algorithm 2.B hash AES-ENCRYPTS ~16k
-# blocks per password — at the per-byte formulation's ~60 us/block that
-# was ~1 s per hash. Only the forward direction is word-oriented: the
-# decrypt path stays per-byte (stream decryption is a few hundred blocks
-# per doc — never the bottleneck). Tables derive from the same
-# _SBOX/_mul reference primitives; FIPS-197 known-answer tests pin both.
-_TE0, _TE1, _TE2, _TE3 = [], [], [], []
-for _x in range(256):
-    _s = _SBOX[_x]
-    _w = (_mul(_s, 2) << 24) | (_s << 16) | (_s << 8) | _mul(_s, 3)
-    _TE0.append(_w)
-    _TE1.append(((_w >> 8) | (_w << 24)) & 0xFFFFFFFF)
-    _TE2.append(((_w >> 16) | (_w << 16)) & 0xFFFFFFFF)
-    _TE3.append(((_w >> 24) | (_w << 8)) & 0xFFFFFFFF)
-del _x, _s, _w
-
-
-def _expand_key(key: bytes) -> list[bytes]:
-    """FIPS-197 §5.2 key schedule: 128-bit → 11 round keys, 256-bit →
-    15 round keys (Nk = 4 or 8, Nr = Nk + 6)."""
-    nk = len(key) // 4
-    if nk not in (4, 8):
-        raise ValueError(f"unsupported AES key length {len(key)}")
-    nr = nk + 6
-    total = 4 * (nr + 1)
-    words = [key[i:i + 4] for i in range(0, len(key), 4)]
-    for i in range(nk, total):
-        temp = words[i - 1]
-        if i % nk == 0:
-            temp = bytes((_SBOX[temp[1]] ^ _RCON[i // nk - 1],
-                          _SBOX[temp[2]], _SBOX[temp[3]], _SBOX[temp[0]]))
-        elif nk == 8 and i % nk == 4:
-            # AES-256 extra SubWord (no rotate, no Rcon)
-            temp = bytes(_SBOX[b] for b in temp)
-        words.append(bytes(x ^ y for x, y in zip(words[i - nk], temp)))
-    return [b"".join(words[i:i + 4]) for i in range(0, total, 4)]
-
-
-def _add_round_key(s: bytearray, rk: bytes) -> None:
-    for i in range(16):
-        s[i] ^= rk[i]
-
-
-# SubBytes + ShiftRows source-index permutations (column-major s[r + 4c]),
-# precomputed so the per-round hot path is one comprehension per direction.
-_SHIFT_PERM = {
-    inv: [r + 4 * (((c - r) if inv else (c + r)) % 4)
-          for c in range(4) for r in range(4)]
-    for inv in (False, True)
-}
-
-
-def _sub_shift(s: bytearray, box: bytes, inv: bool) -> None:
-    # SubBytes + ShiftRows fused
-    t = bytes(s)
-    s[:] = bytes(box[t[p]] for p in _SHIFT_PERM[inv])
-
-
-def _mix_columns(s: bytearray, inv: bool) -> None:
-    m = ((14, 11, 13, 9) if inv else (2, 3, 1, 1))
-    t0, t1, t2, t3 = (_MUL[m[0]], _MUL[m[1]], _MUL[m[2]], _MUL[m[3]])
-    for c in range(0, 16, 4):
-        c0, c1, c2, c3 = s[c], s[c + 1], s[c + 2], s[c + 3]
-        s[c] = t0[c0] ^ t1[c1] ^ t2[c2] ^ t3[c3]
-        s[c + 1] = t3[c0] ^ t0[c1] ^ t1[c2] ^ t2[c3]
-        s[c + 2] = t2[c0] ^ t3[c1] ^ t0[c2] ^ t1[c3]
-        s[c + 3] = t1[c0] ^ t2[c1] ^ t3[c2] ^ t0[c3]
-
-
-def _words_of_rks(rks: list[bytes]) -> list[tuple[int, int, int, int]]:
-    return [tuple(int.from_bytes(rk[i:i + 4], "big") for i in (0, 4, 8, 12))
-            for rk in rks]
-
-
-def _aes_encrypt_words(wks, s0: int, s1: int, s2: int, s3: int):
-    """One block through the T-table cipher; state is four column words."""
-    k = wks[0]
-    s0 ^= k[0]; s1 ^= k[1]; s2 ^= k[2]; s3 ^= k[3]  # noqa: E702
-    te0, te1, te2, te3 = _TE0, _TE1, _TE2, _TE3
-    for k in wks[1:-1]:
-        t0 = (te0[s0 >> 24] ^ te1[(s1 >> 16) & 255]
-              ^ te2[(s2 >> 8) & 255] ^ te3[s3 & 255] ^ k[0])
-        t1 = (te0[s1 >> 24] ^ te1[(s2 >> 16) & 255]
-              ^ te2[(s3 >> 8) & 255] ^ te3[s0 & 255] ^ k[1])
-        t2 = (te0[s2 >> 24] ^ te1[(s3 >> 16) & 255]
-              ^ te2[(s0 >> 8) & 255] ^ te3[s1 & 255] ^ k[2])
-        t3 = (te0[s3 >> 24] ^ te1[(s0 >> 16) & 255]
-              ^ te2[(s1 >> 8) & 255] ^ te3[s2 & 255] ^ k[3])
-        s0, s1, s2, s3 = t0, t1, t2, t3
-    k = wks[-1]
-    sb = _SBOX
-    return (
-        ((sb[s0 >> 24] << 24) | (sb[(s1 >> 16) & 255] << 16)
-         | (sb[(s2 >> 8) & 255] << 8) | sb[s3 & 255]) ^ k[0],
-        ((sb[s1 >> 24] << 24) | (sb[(s2 >> 16) & 255] << 16)
-         | (sb[(s3 >> 8) & 255] << 8) | sb[s0 & 255]) ^ k[1],
-        ((sb[s2 >> 24] << 24) | (sb[(s3 >> 16) & 255] << 16)
-         | (sb[(s0 >> 8) & 255] << 8) | sb[s1 & 255]) ^ k[2],
-        ((sb[s3 >> 24] << 24) | (sb[(s0 >> 16) & 255] << 16)
-         | (sb[(s1 >> 8) & 255] << 8) | sb[s2 & 255]) ^ k[3],
-    )
-
-
-def _aes_encrypt_block(rks: list[bytes], block: bytes) -> bytes:
-    w = _aes_encrypt_words(
-        _words_of_rks(rks),
-        int.from_bytes(block[0:4], "big"), int.from_bytes(block[4:8], "big"),
-        int.from_bytes(block[8:12], "big"),
-        int.from_bytes(block[12:16], "big"))
-    return b"".join(x.to_bytes(4, "big") for x in w)
-
-
-def _aes_decrypt_block(rks: list[bytes], block: bytes) -> bytes:
-    nr = len(rks) - 1
-    s = bytearray(block)
-    _add_round_key(s, rks[nr])
-    for rnd in range(nr - 1, 0, -1):
-        _sub_shift(s, _INV_SBOX, inv=True)
-        _add_round_key(s, rks[rnd])
-        _mix_columns(s, inv=True)
-    _sub_shift(s, _INV_SBOX, inv=True)
-    _add_round_key(s, rks[0])
-    return bytes(s)
-
 
 def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     """AESV2 stream layout: 16-byte IV prefix + ciphertext; PKCS#7 pad.
@@ -239,19 +80,11 @@ def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     caller degrades to the ``encrypted`` tag rather than emitting noise."""
     if len(data) < 32 or len(data) % 16:
         raise ValueError("AES ciphertext not a whole number of blocks")
-    rks = _expand_key(key)
-    iv, ct = data[:16], data[16:]
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(ct), 16):
-        block = ct[i:i + 16]
-        dec = _aes_decrypt_block(rks, block)
-        out.extend(x ^ y for x, y in zip(dec, prev))
-        prev = block
+    out = aes_cbc_decrypt_nopad(key, data[:16], data[16:])
     pad = out[-1]
-    if not 1 <= pad <= 16 or out[-pad:] != bytearray([pad]) * pad:
+    if not 1 <= pad <= 16 or out[-pad:] != bytes([pad]) * pad:
         raise ValueError("bad AES-CBC padding")
-    return bytes(out[:-pad])
+    return out[:-pad]
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, plaintext: bytes) -> bytes:
@@ -263,44 +96,19 @@ def aes_cbc_encrypt(key: bytes, iv: bytes, plaintext: bytes) -> bytes:
 
 def aes_cbc_encrypt_nopad(key: bytes, iv: bytes, plaintext: bytes) -> bytes:
     """Raw CBC, no padding, no IV prefix — the mode ISO 32000-2 uses for
-    the Algorithm 2.B hash rounds and the /UE//OE key wrap. CBC chaining
-    stays in word space: one key-schedule word conversion per message,
-    four int round-trips per block."""
+    the Algorithm 2.B hash rounds and the /UE//OE key wrap."""
     if len(plaintext) % 16:
         raise ValueError("CBC-nopad plaintext not a whole block multiple")
-    wks = _words_of_rks(_expand_key(key))
-    out = bytearray()
-    p0 = int.from_bytes(iv[0:4], "big")
-    p1 = int.from_bytes(iv[4:8], "big")
-    p2 = int.from_bytes(iv[8:12], "big")
-    p3 = int.from_bytes(iv[12:16], "big")
-    for i in range(0, len(plaintext), 16):
-        p0, p1, p2, p3 = _aes_encrypt_words(
-            wks,
-            p0 ^ int.from_bytes(plaintext[i:i + 4], "big"),
-            p1 ^ int.from_bytes(plaintext[i + 4:i + 8], "big"),
-            p2 ^ int.from_bytes(plaintext[i + 8:i + 12], "big"),
-            p3 ^ int.from_bytes(plaintext[i + 12:i + 16], "big"))
-        out.extend(p0.to_bytes(4, "big"))
-        out.extend(p1.to_bytes(4, "big"))
-        out.extend(p2.to_bytes(4, "big"))
-        out.extend(p3.to_bytes(4, "big"))
-    return bytes(out)
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    return enc.update(plaintext) + enc.finalize()
 
 
 def aes_cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
     """Raw CBC decrypt, no padding, no IV prefix (/UE//OE unwrap)."""
     if len(data) % 16:
         raise ValueError("CBC-nopad ciphertext not a whole block multiple")
-    rks = _expand_key(key)
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        block = data[i:i + 16]
-        dec = _aes_decrypt_block(rks, block)
-        out.extend(x ^ y for x, y in zip(dec, prev))
-        prev = block
-    return bytes(out)
+    dec = Cipher(algorithms.AES(key), modes.CBC(iv)).decryptor()
+    return dec.update(data) + dec.finalize()
 
 
 # ---------------------------------------------------------------------------
@@ -379,13 +187,12 @@ def hash_2b(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     round's AES output E is ≤ (round − 32). ``udata`` is the 48-byte /U
     string when hashing an OWNER password, else empty.
 
-    Deliberately expensive by spec (~16k AES blocks ≈ 0.4 s in this
-    pure-Python core even with the T-table path) — it is a password KDF.
-    The lru_cache makes cost per DISTINCT (password, salt, udata), so a
-    corpus whose producer reused salts (the fixture does, corpus-wide)
-    pays once; a real crawl with per-doc salts pays per doc, which is
-    where a production deployment swaps in a C AES via a vectorized UDF
-    batch — the call sites would not change."""
+    Deliberately expensive by spec: it is a password KDF of at least 64
+    rounds, each AES-encrypting a 64-fold repeated buffer (~16k blocks per
+    hash, a few ms through OpenSSL). The lru_cache makes cost per DISTINCT
+    (password, salt, udata), so a corpus whose producer reused salts (the
+    fixture does, corpus-wide) pays once; a real crawl with per-doc salts
+    pays per doc."""
     k = hashlib.sha256(password + salt + udata).digest()
     rnd = 0
     while True:

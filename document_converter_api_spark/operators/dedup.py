@@ -31,13 +31,12 @@ deterministic corpus: documents ∪ exact copies (doc_id+10000 for doc_id%5=0)
 engines build the same derivation, so the oracle checks the operator, not
 the data generator.
 
-Lowercasing caveat: the Arrow fast paths use Python ``str.lower`` (simple
-Unicode mapping), which matches DuckDB's utf8proc ``lower`` — i.e. the
-ORACLE — everywhere, while the JVM HOF twins inherit Java's
-context-sensitive special casing (word-final Greek Σ→ς). The
-Python↔JVM parity tests therefore hold on text where simple and
-context-sensitive lowercasing agree (all ASCII and most scripts); on
-final-sigma Greek the Python path is the one that matches the oracle.
+Lowercasing: the shingle, MinHash and SimHash stages run as Arrow-batched
+Python and lowercase with ``str.lower`` (simple Unicode mapping), which
+matches DuckDB's utf8proc ``lower`` — the ORACLE — on every script. A
+JVM ``F.lower`` version would not: Java applies context-sensitive special
+casing (word-final Greek Σ→ς). The oracle-parity tests pin all three
+Arrow stages against the DuckDB SQL, which is their spec.
 """
 
 from __future__ import annotations
@@ -82,35 +81,6 @@ _CORPUS_SQL = """
 """
 
 
-def _shingles_of_words(words):
-    """Distinct 3-word shingles from a materialized words ARRAY column.
-
-    ``words`` SHOULD be a real column (see with_shingles) — and the gram
-    build is ``zip_with`` over slices rather than
-    ``transform(sequence, i -> element_at(words, i))`` so that even if a
-    later optimizer pass inlines the split subtree (CollapseProject does
-    this when the input is an aggregate, not a scan — observed as a
-    1,300-CPU-second task in the curation 2-gram twin), each array
-    ARGUMENT is evaluated once per row and the worst case stays
-    O(words), never O(words²) interpreted re-splits."""
-    n = F.greatest(F.size(words) - F.lit(2), F.lit(0))
-    tail_pairs = F.zip_with(
-        F.slice(words, 2, n), F.slice(words, 3, n),
-        lambda b, c: F.concat_ws(" ", b, c))
-    grams = F.zip_with(
-        F.slice(words, 1, n), tail_pairs,
-        lambda a, bc: F.concat_ws(" ", a, bc))
-    return F.array_distinct(F.when(n > 0, grams).otherwise(F.array()))
-
-
-def with_shingles(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """df + ``sh`` column. ``words`` goes through a projection boundary so
-    CollapseProject keeps it materialized (multi-use non-cheap alias)."""
-    return (widen(df)
-            .withColumn("words", F.split(F.lower(F.col(text_col)), " ", -1))
-            .withColumn("sh", _shingles_of_words(F.col("words")))
-            .drop("words"))
-
 _SHINGLES_SQL = """
     list_distinct(CASE WHEN len(str_split(lower(text), ' ')) >= 3 THEN
       list_transform(range(1, len(str_split(lower(text), ' ')) - 1),
@@ -144,7 +114,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shingle_rows_batches(it):
     """Arrow-batched shingle emitter: (doc_id, n_sh, shingle) per DISTINCT
     3-gram — the exploded form the posting-list groupBy consumes, produced
-    in one Python pass instead of the JVM higher-order transform + Explode
+    in one Python pass instead of a JVM higher-order transform + Explode
     (HOFs run interpreted with no codegen; measured ~3x at sf0.1)."""
     import pandas as pd
 
@@ -154,7 +124,7 @@ def _shingle_rows_batches(it):
         shingles: list[str] = []
         for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
             if not isinstance(text, str):
-                continue  # NULL text: JVM/oracle twins drop via len(sh)>0
+                continue  # NULL text: the oracle drops it via len(sh)>0
             words = text.lower().split(" ")
             if len(words) < 3:
                 continue
@@ -216,39 +186,15 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 3. MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _minhash_sig(sh):
-    """K=8 minima over the shingle set from TWO md5 evaluations per shingle
-    (not K): each 128-bit digest yields four independent 32-bit pieces
-    (8 hex chars), and lowercase hex is lexicographically monotonic in the
-    integer value, so string-min == numeric min. The fold is a single
-    ``F.aggregate`` pass referencing the hash array exactly once — writing
-    K separate ``array_min(transform(...))`` expressions would duplicate
-    the md5 subtree K times in the plan (higher-order functions are outside
-    whole-stage codegen, so common-subexpression elimination cannot be
-    relied on). Measured ~3x faster at sf0.1. Init 'g' sorts after every
-    hex char, i.e. acts as +infinity.
-
-    NB: lambdas must be unary — F.transform treats a 2-arg lambda as
-    (element, index), which would silently replace the hash key with the
-    array position."""
-    hashes = F.transform(sh, lambda s: F.concat(
-        F.md5(F.concat(F.lit("0|"), s)), F.md5(F.concat(F.lit("1|"), s))))
-    init = F.array(*[F.lit("g") for _ in range(N_MINHASH)])
-    return F.aggregate(
-        hashes, init,
-        lambda acc, h: F.array(*[
-            F.least(F.element_at(acc, k + 1), F.substring(h, k * 8 + 1, 8))
-            for k in range(N_MINHASH)]))
-
-
 def _minhash_sig_batches(it):
-    """Arrow-batched MinHash signatures: same algorithm/bytes as
-    :func:`_minhash_sig` (two keyed md5s per distinct shingle, string-min
-    over 8-hex-char pieces) but computed with ``hashlib`` in one Python pass
-    per batch. The JVM fold runs interpreted (no whole-stage codegen for
-    higher-order lambdas) and re-allocates the 8-slot accumulator array per
-    shingle; measured 5x faster here at sf0.1 with byte-identical output
-    (pinned by tests/test_operators.py)."""
+    """Arrow-batched MinHash signatures, K=8 minima from TWO md5
+    evaluations per distinct shingle (not K): each 128-bit digest yields
+    four 32-bit pieces (8 hex chars), and lowercase hex is
+    lexicographically monotonic in the integer value, so string-min ==
+    numeric min; 'g' * 8 sorts after every hex piece, i.e. +infinity.
+    One ``hashlib`` pass per batch — measured 5x faster at sf0.1 than the
+    equivalent JVM higher-order fold, which runs interpreted. Byte-equal
+    to the DuckDB oracle (tests/test_oracle_parity.py)."""
     from hashlib import md5
 
     import pandas as pd
@@ -258,7 +204,7 @@ def _minhash_sig_batches(it):
         out_sigs: list[list[str]] = []
         for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
             if not isinstance(text, str):
-                continue  # NULL text: JVM/oracle twins drop via len(sh)>0
+                continue  # NULL text: the oracle drops it via len(sh)>0
             words = text.lower().split(" ")
             if len(words) < 3:
                 continue
@@ -421,44 +367,15 @@ _CLUSTERS_ORACLE = """
 _LONG_MIN = -9223372036854775808  # two's-complement value of bit 63
 
 
-def _simhash_from_hashes(hh):
-    """64-bit simhash: bit b = majority over token OCCURRENCES of bit
-    ``b % 4`` of md5-hex-nibble ``b // 4``. Integer-only (+1/-1 sums; ties
-    → bit set) for cross-engine determinism. Bit 63 contributes the
-    two's-complement constant so the signature stays a signed LongType —
-    the same arithmetic the DuckDB oracle and the Arrow fast path use.
-
-    ``hh`` MUST be a materialized column of per-token md5 hex strings:
-    hashing inline here would recompute md5 per token per BIT (64x), since
-    the per-bit folds each reference the array independently and
-    higher-order lambdas get no codegen/CSE.
-
-    This JVM form is the executable spec pinned byte-equal to
-    :func:`_simhash_batches` in tests; the Arrow form is the fast path."""
-    def bit_sum(b):
-        pos, k = b // 4 + 1, b % 4
-        return F.aggregate(
-            hh, F.lit(0),
-            lambda acc, h: acc + F.when(
-                F.shiftright(F.conv(F.substring(h, pos, 1), 16, 10)
-                             .cast("int"), k).bitwiseAND(F.lit(1)) == 1,
-                1).otherwise(-1))
-    val = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS - 1):
-        val = val + F.when(bit_sum(b) >= 0,
-                           F.lit(1 << b).cast("long")).otherwise(F.lit(0))
-    val = val + F.when(bit_sum(SIMHASH_BITS - 1) >= 0,
-                       F.lit(_LONG_MIN)).otherwise(F.lit(0))
-    return val
-
-
 def _simhash_batches(it):
-    """Arrow-batched 64-bit simhash: same bit-majority semantics as
-    :func:`_simhash_from_hashes` (every token OCCURRENCE votes ±1 per
-    nibble-bit, ties set the bit) with a per-batch token→votes memo —
-    tokens repeat heavily, and the JVM version cannot share the md5 across
-    its 64 per-bit folds (pinned equal in tests/test_operators.py). Votes
-    are memoized as ±1 int16 vectors so a document is one numpy sum."""
+    """Arrow-batched 64-bit simhash: bit b = majority over token
+    OCCURRENCES of bit ``b % 4`` of md5-hex-nibble ``b // 4`` (every
+    occurrence votes ±1, ties set the bit). Integer-only for cross-engine
+    determinism; bit 63 contributes the two's-complement constant so the
+    signature stays a signed LongType, the same arithmetic as the DuckDB
+    oracle (tests/test_oracle_parity.py). A per-batch token→votes memo
+    pays one md5 per distinct token — tokens repeat heavily — and votes
+    are ±1 int16 vectors so a document is one numpy sum."""
     from hashlib import md5
 
     import numpy as np
@@ -479,8 +396,8 @@ def _simhash_batches(it):
         out_sigs: list[int] = []
         for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
             if not isinstance(text, str):
-                # NULL text: both twins KEEP the row with simhash 0 (every
-                # per-bit vote folds over a NULL array → CASE falls through)
+                # NULL text: the oracle KEEPS the row with simhash 0 (its
+                # LEFT JOIN re-enters NULL-text docs at 0)
                 out_ids.append(doc_id)
                 out_sigs.append(0)
                 continue
@@ -590,7 +507,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(sigs)
 
 
-# 64-bit simhash twin: md5 evaluated ONCE per token occurrence (unnest +
+# Oracle 64-bit simhash: md5 evaluated ONCE per token occurrence (unnest +
 # group-by-doc), per-bit votes from the 16 leading hex nibbles, bit 63 as
 # the two's-complement constant so the BIGINT arithmetic matches Spark's
 # signed LongType exactly. NULL-text docs re-enter via LEFT JOIN at 0.

@@ -237,7 +237,8 @@ def run_extraction_job(
         for p in group:
             m = mrows.get(p, {"doc_count": 0, "bytes_in": 0, "bytes_out": 0,
                               "failure_count": 0, "needs_ocr_count": 0,
-                              "encrypted_count": 0, "failure_urls": []})
+                              "encrypted_count": 0, "timeout_count": 0,
+                              "failure_urls": []})
             rn, rb, rurls = rej_counts.get(p, (0, 0, []))
             merged_rows[p] = {
                 "status": "completed",
@@ -247,6 +248,7 @@ def run_extraction_job(
                 "failure_count": int((m["failure_count"] or 0) + rn),
                 "needs_ocr_count": int(m["needs_ocr_count"] or 0),
                 "encrypted_count": int(m["encrypted_count"] or 0),
+                "timeout_count": int(m["timeout_count"] or 0),
                 "failure_urls": (list(m["failure_urls"] or []) + list(rurls or []))[:20],
                 "completed_at": done_ts,
             }

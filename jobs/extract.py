@@ -18,6 +18,9 @@ Sandbox smoke (what tests/test_spark_submit.py runs)::
         jobs/extract.py --input fixtures/data/pages_smoke.parquet \
         --output /tmp/out --partitions 8
 
+Executors' Python needs ``pyarrow``, ``pandas`` and ``cryptography``
+installed; ``--py-files`` ships only this repo's package.
+
 The job is resumable: re-submitting with the same --output skips partitions
 already marked completed in the lineage store (J3 anti-join semantics,
 SURVEY.md §2.3). All tuning flags deliberately mirror

@@ -493,52 +493,6 @@ class TestAnnScaleParameters:
             assert 1 <= r.rank <= S.IVF_TOP_K
 
 
-class TestDedupArrowJvmParity:
-    """The Arrow-batched Python signature stages must be byte-equal to their
-    pure-JVM higher-order-function twins (the HOF forms stay in the module
-    as the executable spec; the Python forms are the fast path)."""
-
-    SF = "/root/testdata/sf0.001"
-
-    def test_minhash_pandas_equals_hof(self, spark):
-        from document_converter_api_spark.operators import dedup as D
-        corpus = D._corpus(spark, self.SF)
-        py = (corpus.mapInPandas(D._minhash_sig_batches,
-                                 "doc_id long, sig array<string>")
-              .select("doc_id", F.concat_ws(",", "sig").alias("s")))
-        hof = (D.with_shingles(corpus).filter(F.size("sh") > 0)
-               .select("doc_id", D._minhash_sig(F.col("sh")).alias("sig"))
-               .select("doc_id", F.concat_ws(",", "sig").alias("s")))
-        assert py.exceptAll(hof).count() == 0
-        assert hof.exceptAll(py).count() == 0
-
-    def test_shingle_rows_pandas_equals_hof(self, spark):
-        from document_converter_api_spark.operators import dedup as D
-        corpus = D._corpus(spark, self.SF)
-        py = corpus.mapInPandas(D._shingle_rows_batches,
-                                "doc_id long, n_sh int, shingle string")
-        sized = (D.with_shingles(corpus)
-                 .select("doc_id", "sh", F.size("sh").alias("n_sh"))
-                 .filter("n_sh > 0"))
-        hof = sized.select("doc_id", F.col("n_sh").cast("int").alias("n_sh"),
-                           F.explode("sh").alias("shingle"))
-        assert py.exceptAll(hof).count() == 0
-        assert hof.exceptAll(py).count() == 0
-
-    def test_simhash_pandas_equals_hof(self, spark):
-        from document_converter_api_spark.operators import dedup as D
-        corpus = D._corpus(spark, self.SF)
-        py = corpus.mapInPandas(D._simhash_batches,
-                                "doc_id long, simhash long")
-        hof = (corpus
-               .withColumn("toks", F.split(F.lower(F.col("text")), " ", -1))
-               .withColumn("hh", F.transform(F.col("toks"), F.md5))
-               .select("doc_id",
-                       D._simhash_from_hashes(F.col("hh")).alias("simhash")))
-        assert py.exceptAll(hof).count() == 0
-        assert hof.exceptAll(py).count() == 0
-
-
 class TestScanWiden:
     def test_widen_noops_on_wide_input(self, spark, tmp_path):
         """At real corpus scale the scan already spans >= cluster-width

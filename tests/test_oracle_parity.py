@@ -17,7 +17,8 @@ SF = "/root/testdata/sf0.001"
 SUBSET = (
     "status_counts", "jobs_listing", "point_lookup", "tpch_q1",
     "window_rank", "plain_text_format", "chunk_text", "json_props",
-    "dedup_exact", "dedup_minhash_lsh", "ann_cosine_topk",
+    "dedup_exact", "dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "dedup_simhash", "ann_cosine_topk",
     "lang_id", "fingerprint", "multimodal_decode", "host_stats_salted",
     "rollup_stats", "distinct_users", "except_users", "top_revenue_orders",
     "download_names", "result_json", "region_revenue", "part_type_share",

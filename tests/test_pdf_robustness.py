@@ -402,9 +402,13 @@ class TestEncryptedDecryption:
                                   aes=False)
         assert pdf_to_text(pdf) == self.WANT
 
-    def test_rc4_128_v2_r3(self):
-        pdf = build_encrypted_pdf(self.LINES, v=2, r=3, length_bits=128,
-                                  aes=False)
+    @pytest.mark.parametrize("length_bits", range(40, 129, 8))
+    def test_rc4_v2_r3_every_length(self, length_bits):
+        """ISO 32000 allows any /Length from 40 to 128 in steps of 8; the
+        per-object RC4 keys then run 10..16 bytes (11 for /Length 48),
+        lengths a fixed-size-key RC4 implementation would reject."""
+        pdf = build_encrypted_pdf(self.LINES, v=2, r=3,
+                                  length_bits=length_bits, aes=False)
         assert pdf_to_text(pdf) == self.WANT
 
     def test_aes128_v4_r4(self):
@@ -544,31 +548,74 @@ class TestEncryptedDecryption:
 
 
 class TestAesPrimitives:
-    """Known-answer vectors pin the cipher core both widths."""
+    """Known-answer vectors pin the AES-CBC entry points at both widths.
+    A zero IV makes one CBC block a plain ECB block, so the FIPS-197
+    single-block vectors apply directly."""
+
+    ZERO_IV = bytes(16)
+
+    def _single_block(self, key_hex: str, ct_hex: str) -> None:
+        from document_converter_api_spark.extraction.pdf_crypt import (
+            aes_cbc_decrypt_nopad, aes_cbc_encrypt_nopad,
+        )
+        key, ct = bytes.fromhex(key_hex), bytes.fromhex(ct_hex)
+        pt = bytes.fromhex("00112233445566778899aabbccddeeff")
+        assert aes_cbc_encrypt_nopad(key, self.ZERO_IV, pt) == ct
+        assert aes_cbc_decrypt_nopad(key, self.ZERO_IV, ct) == pt
 
     def test_fips197_c1_aes128(self):
-        from document_converter_api_spark.extraction.pdf_crypt import (
-            _aes_decrypt_block, _aes_encrypt_block, _expand_key,
-        )
-        key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
-        pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-        ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-        rks = _expand_key(key)
-        assert _aes_encrypt_block(rks, pt) == ct
-        assert _aes_decrypt_block(rks, ct) == pt
+        self._single_block("000102030405060708090a0b0c0d0e0f",
+                           "69c4e0d86a7b0430d8cdb78070b4c55a")
 
     def test_fips197_c3_aes256(self):
+        self._single_block("000102030405060708090a0b0c0d0e0f"
+                           "101112131415161718191a1b1c1d1e1f",
+                           "8ea2b7ca516745bfeafc49904b496089")
+
+    @pytest.mark.parametrize("key_hex,ct_hex", [
+        # NIST SP 800-38A F.2.1 (CBC-AES128) and F.2.5 (CBC-AES256),
+        # first block
+        ("2b7e151628aed2a6abf7158809cf4f3c",
+         "7649abac8119b246cee98e9b12e9197d"),
+        ("603deb1015ca71be2b73aef0857d7781"
+         "1f352c073b6108d72d9810a30914dff4",
+         "f58c4c04d6e5f1ba779eabfb5f7bfbd6"),
+    ], ids=["sp800_38a_f21_aes128", "sp800_38a_f25_aes256"])
+    def test_sp800_38a_cbc_first_block(self, key_hex, ct_hex):
         from document_converter_api_spark.extraction.pdf_crypt import (
-            _aes_decrypt_block, _aes_encrypt_block, _expand_key,
+            aes_cbc_decrypt, aes_cbc_decrypt_nopad, aes_cbc_encrypt,
+            aes_cbc_encrypt_nopad,
         )
-        key = bytes.fromhex("000102030405060708090a0b0c0d0e0f"
-                            "101112131415161718191a1b1c1d1e1f")
-        pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-        ct = bytes.fromhex("8ea2b7ca516745bfeafc49904b496089")
-        rks = _expand_key(key)
-        assert len(rks) == 15
-        assert _aes_encrypt_block(rks, pt) == ct
-        assert _aes_decrypt_block(rks, ct) == pt
+        key, ct = bytes.fromhex(key_hex), bytes.fromhex(ct_hex)
+        iv = bytes(range(16))
+        pt = bytes.fromhex("6bc1bee22e409f96e93d7e117393172a")
+        assert aes_cbc_encrypt_nopad(key, iv, pt) == ct
+        assert aes_cbc_decrypt_nopad(key, iv, ct) == pt
+        # the padded stream layout: IV prefix, same first block, PKCS#7
+        stream = aes_cbc_encrypt(key, iv, pt)
+        assert stream[:32] == iv + ct and len(stream) == 48
+        assert aes_cbc_decrypt(key, stream) == pt
+
+    def test_malformed_input_raises_value_error(self):
+        """The caller maps ValueError to a dropped object / the
+        ``encrypted`` tag, so every malformed shape must raise exactly
+        that: partial blocks, a missing ciphertext block, bad padding."""
+        from document_converter_api_spark.extraction.pdf_crypt import (
+            aes_cbc_decrypt, aes_cbc_decrypt_nopad, aes_cbc_encrypt,
+            aes_cbc_encrypt_nopad,
+        )
+        key = bytes(16)
+        for data in (b"", bytes(16), bytes(33)):
+            with pytest.raises(ValueError, match="whole number of blocks"):
+                aes_cbc_decrypt(key, data)
+        with pytest.raises(ValueError, match="whole block multiple"):
+            aes_cbc_encrypt_nopad(key, self.ZERO_IV, bytes(15))
+        with pytest.raises(ValueError, match="whole block multiple"):
+            aes_cbc_decrypt_nopad(key, self.ZERO_IV, bytes(17))
+        stream = bytearray(aes_cbc_encrypt(key, self.ZERO_IV, b"x" * 16))
+        stream[-1] ^= 0xFF  # garbles the last plaintext block's padding
+        with pytest.raises(ValueError, match="padding"):
+            aes_cbc_decrypt(key, bytes(stream))
 
     def test_u_ue_roundtrip_and_wrong_password(self):
         from document_converter_api_spark.extraction.pdf_crypt import (

@@ -133,3 +133,38 @@ def test_spark_stage_counts_timeouts(spark):
         assert sum(r["timeout_count"] for r in lineage.collect()) == 1
     finally:
         results.unpersist()
+
+
+def test_lineage_persists_timeout_count(spark, tmp_path, monkeypatch):
+    """The written lineage rows carry ``timeout_count``, not only the
+    intermediate ``partition_metrics`` frame."""
+    import functools
+    import os
+
+    from document_converter_api_spark.operators import extract
+    from document_converter_api_spark.plans import pipeline
+    from document_converter_api_spark.sources.tableio import LineageStore
+
+    rows = [("https://h.example/slow.html", bytearray(SLOW_HTML), "en")]
+    rows += [(f"https://h.example/fast{i}.html", bytearray(FAST_HTML), "en")
+             for i in range(8)]
+    pages_path = str(tmp_path / "pages")
+    (spark.createDataFrame(rows, "url string, html binary, lang string")
+     .write.parquet(pages_path))
+    # run_extraction_job arms the production budget; a 0.25 s budget
+    # times out the slow page only (same margins as above)
+    monkeypatch.setattr(pipeline, "run_extract", functools.partial(
+        extract.run_extract, doc_time_budget_s=0.25))
+    out = str(tmp_path / "out")
+    pipeline.run_extraction_job(spark, pages_path, out, num_partitions=4,
+                                partitions_per_commit=2,
+                                shuffle_partitions=4)
+
+    lineage = LineageStore(
+        os.path.join(out, "_lineage", "lineage.json")).load()
+    assert set(lineage) == set(range(4))
+    assert all(r["status"] == "completed" for r in lineage.values())
+    assert sum(r["timeout_count"] for r in lineage.values()) == 1
+    assert sum(r["doc_count"] for r in lineage.values()) == 9
+    assert all(r["failure_count"] >= r["timeout_count"]
+               for r in lineage.values())

@@ -3,7 +3,10 @@
 North-rule packaging requirement (BASELINE.json north_star: "packaged for
 `spark-submit --py-files` on multi-executor clusters"): the whole
 ``document_converter_api_spark`` package is zipped so executors' Python
-workers can import the extraction core without any cluster-side install.
+workers can import the extraction core without a cluster-side install of
+this repo. The zip carries no third-party code: executors' Python must
+already have ``pyarrow``, ``pandas`` and ``cryptography`` (AES for
+encrypted PDFs) installed.
 Deterministic output (fixed mtimes, sorted entries) so the zip is
 byte-stable across rebuilds and safe to cache on HDFS/S3.
 
