@@ -4,9 +4,10 @@ North-rule addition (/root/repo/BASELINE.json:6,14 — "boilerplate stripping vi
 text-density and link-density DOM heuristics"): the reference delegates whole-
 document conversion to MarkItDown (/root/reference/app/main.py:383-391) and
 keeps everything; a Common-Crawl-scale pipeline must instead retain only main
-content. This module prunes hard-boilerplate subtrees (nav/footer/ads …) and
-classifies remaining text blocks by *text density* (chars per 80-col wrapped
-line) and *link density* (anchor chars / total chars).
+content. This module names the hard-boilerplate subtrees (nav/footer/ads …)
+the DOM builder drops at parse time, and classifies the remaining text blocks
+by *text density* (chars per 80-col wrapped line) and *link density* (anchor
+chars / total chars).
 
 All decisions use integer arithmetic (``3*anchor <= chars`` instead of float
 ratios — SURVEY.md §7.4.2) so classification never flips across platforms and
@@ -21,7 +22,7 @@ import re
 
 from .html_dom import Node
 
-# Subtrees removed outright before block extraction.
+# Subtrees dropped outright at parse time (never reach block extraction).
 PRUNE_TAGS = frozenset(
     {
         "script", "style", "noscript", "template", "head", "title",
@@ -63,52 +64,20 @@ WRAP_COLS = 80
 MIN_DENSITY = 10
 
 
-def is_denied(node: Node) -> bool:
-    """True if this element subtree is hard boilerplate (tag or class/id).
-    Delegates to :func:`deny_attrs` so the prune() reference spec and the
-    builder's parse-time suppression can never desynchronize."""
-    if node.tag in PRUNE_TAGS:
-        return True
-    return bool(node.attrs) and deny_attrs(node.tag, node.attrs)
-
-
 def deny_attrs(tag: str, attrs: dict) -> bool:
-    """Build-time twin of :func:`is_denied`'s class/id check (the tag check
-    is handled by the builder's ``suppress_tags``). Same blob + regex, so
-    suppressing at parse time == building fully then pruning."""
+    """True if an element's class/id marks it as hard boilerplate. The
+    DOM builder calls this at parse time (the tag check is its
+    ``suppress_tags``), so denied subtrees are never attached."""
     if "class" not in attrs and "id" not in attrs:
         return False
     blob = ((attrs.get("class") or "") + " " + (attrs.get("id") or "")).lower()
     return bool(blob.strip()) and bool(_DENY_CLASS.search(blob))
 
 
-def prune(node: Node) -> None:
-    """Remove hard-boilerplate subtrees in place (pre-order)."""
-    node.children = [c for c in node.children if c.tag is None or not is_denied(c)]
-    for c in node.children:
-        if c.tag is not None:
-            prune(c)
-
-
-def anchor_chars(node: Node) -> int:
-    """Collapsed character count of text under ``<a>`` descendants."""
-    total = 0
-    stack = [(node, node.tag == "a")]
-    while stack:
-        n, in_a = stack.pop()
-        if n.tag is None:
-            if in_a:
-                total += len(collapse_ws(n.text))
-            continue
-        for c in n.children:
-            stack.append((c, in_a or c.tag == "a"))
-    return total
-
-
 def text_and_anchor_stats(node: Node) -> tuple[str, int]:
-    """(unnormalized concatenated text, collapsed anchor chars) in ONE
-    subtree traversal — the block builder needs both, and separate
-    iter_text + anchor_chars walks would visit every node twice."""
+    """(unnormalized concatenated text, collapsed chars of text under
+    ``<a>`` elements) in ONE subtree traversal — the block builder needs
+    both."""
     parts: list[str] = []
     anchors = 0
     stack = [(node, node.tag == "a")]

@@ -25,24 +25,13 @@ from html.parser import HTMLParser
 from .deadline import DocTimeBudgetError
 from .deadline import check as _check_deadline
 
-# The one-shot fast path reuses the RUNNING stdlib's own compiled regexes
-# (undocumented module attributes). They have been stable across CPython 3.x
-# for a decade, but they are private: if a future build renames or removes
-# any of them, the module must still import and parse_html must route to the
-# stdlib drive — so the lookups are guarded rather than hard module-level
-# attribute accesses (a bare AttributeError here would take down the whole
-# import and with it the advertised fallback).
-try:
-    _starttagopen = _hp.starttagopen
-    _locatestarttagend = _hp.locatestarttagend_tolerant
-    _tagfind = _hp.tagfind_tolerant
-    _attrfind = _hp.attrfind_tolerant
-    _endtagfind = _hp.endtagfind
-    _FAST_PATH_OK = True
-except AttributeError:  # pragma: no cover — depends on the CPython build
-    _starttagopen = _locatestarttagend = None
-    _tagfind = _attrfind = _endtagfind = None
-    _FAST_PATH_OK = False
+# The one-shot tokenizer reuses the running stdlib's own compiled regexes
+# (undocumented module attributes, stable across CPython 3.x), so its tag
+# and attribute matching is html.parser's by construction.
+_locatestarttagend = _hp.locatestarttagend_tolerant
+_tagfind = _hp.tagfind_tolerant
+_attrfind = _hp.attrfind_tolerant
+_endtagfind = _hp.endtagfind
 _ASCII_ALPHA = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
 
@@ -52,10 +41,10 @@ _CDATA_CLOSE_RES: dict = {}
 def _cdata_close_re(elem: str):
     """The EXACT compiled regex the running stdlib's set_cdata_mode would
     install for ``elem`` — obtained by asking a throwaway HTMLParser, not
-    by re-typing the pattern, so the fast path's close-tag matching is a
-    true twin of the stdlib drive on ANY CPython patch level (the pattern
-    gained a trailing '\\s*>' in hardened releases; hardcoding either form
-    would diverge on the other)."""
+    by re-typing the pattern, so close-tag matching is html.parser's own
+    on ANY CPython patch level (the pattern gained a trailing '\\s*>' in
+    hardened releases; hardcoding either form would diverge on the
+    other)."""
     pat = _CDATA_CLOSE_RES.get(elem)
     if pat is None:
         probe = HTMLParser()
@@ -193,9 +182,9 @@ class _DomBuilder(HTMLParser):
     """``suppress_tags``: subtrees rooted at these tags are dropped AT BUILD
     TIME — stack behavior (implied ends, close matching) is identical, but
     their nodes are never attached and their text is never materialized.
-    Byte-equivalent to building the full tree and pruning those tags
-    afterwards; used by the extraction path (boilerplate PRUNE_TAGS), while
-    ``parse_html`` keeps the full-tree contract."""
+    The extraction path passes boilerplate PRUNE_TAGS plus the class/id
+    ``deny_attrs`` predicate; without them ``parse_html`` builds the full
+    tree."""
 
     def __init__(self, suppress_tags: frozenset[str] | None = None,
                  deny_attrs=None) -> None:
@@ -257,13 +246,7 @@ class _DomBuilder(HTMLParser):
     # (parser.py:313,326,398,407 in CPython 3.11), so no re-lowercasing
     # here; valueless attrs stay None and Node.attr() maps them to "".
 
-    def updatepos(self, i: int, j: int) -> int:
-        # line/column bookkeeping feeds only getpos(), which we never call —
-        # skipping it saves one pass over every inter-token gap.
-        return j
-
     def handle_starttag(self, tag: str, attrs) -> None:
-        _check_deadline()  # budget coverage for the stdlib-drive path too
         self._flush_text()
         implied = _IMPLIED_END.get(tag)
         if implied:
@@ -285,8 +268,7 @@ class _DomBuilder(HTMLParser):
         # stack to keep dropping text). Cdata elements (script/style) also
         # always push — cdata mode engages regardless of depth, and without
         # the push their body text would reparent OUTSIDE the element in
-        # full-tree mode (leaking script source past a later prune). Other
-        # attached nodes stop nesting at cap.
+        # full-tree mode. Other attached nodes stop nesting at cap.
         if tag not in VOID_ELEMENTS and (
                 node.sup or tag in self.CDATA_CONTENT_ELEMENTS
                 or len(self.stack) < MAX_DEPTH):
@@ -334,9 +316,9 @@ class _DomBuilder(HTMLParser):
     # trailing-& buffer guard, check_for_whole_start_tag's buffer-boundary
     # returns, __starttag_text bookkeeping) is dead weight — ~35% of parse
     # time under profile. Branch order, EOF recovery, cdata (script/style)
-    # handling, and every callback payload match the stdlib path byte for
-    # byte; tests/test_extraction_core.py pins equality on the corpus and
-    # the fuzz suite compares both paths on pathological inputs.
+    # handling, and every callback payload match html.parser's own
+    # feed/close drive byte for byte; that drive lives in the tests as the
+    # executable spec, compared on the corpus and on fuzzed markup.
 
     def parse(self, data: str) -> None:
         """One-shot tokenize with end-of-input semantics (== feed+close)."""
@@ -495,10 +477,6 @@ class _DomBuilder(HTMLParser):
         self.clear_cdata_mode()
         return gtpos
 
-    def close(self) -> None:  # stdlib drive: finalize after the last feed
-        super().close()
-        self._finalize_text()
-
     # Comments, PIs, declarations: dropped.
     def handle_comment(self, data: str) -> None:  # noqa: D102
         pass
@@ -514,41 +492,18 @@ def parse_html(html: str, suppress_tags: frozenset[str] | None = None,
                deny_attrs=None) -> Node:
     """Parse HTML text into a tolerant DOM tree; never raises on bad markup.
 
-    Uses the specialized one-shot tokenizer; any unexpected error falls back
-    to the stock ``HTMLParser`` drive (same callbacks, same DOM) so the fast
-    path can never lose a document the stdlib path would have parsed.
-    ``suppress_tags`` drops those subtrees at build time (== building the
-    full tree then pruning them — the extraction path passes PRUNE_TAGS so
-    nav/script/footer text is never even materialized)."""
-    if not _FAST_PATH_OK:  # stdlib internals unavailable on this build
-        return parse_html_stdlib(html, suppress_tags, deny_attrs)
+    html.parser's own helpers raise (``AssertionError`` from
+    ``_markupbase``) on some malformed declarations such as ``<![ x]]>``;
+    the parse stops at that token and the tree built so far stands, as it
+    would under html.parser's feed/close drive. ``suppress_tags`` and
+    ``deny_attrs`` drop subtrees at build time (the extraction path passes
+    PRUNE_TAGS and the class/id deny-list, so nav/script/footer text is
+    never even materialized)."""
     builder = _DomBuilder(suppress_tags, deny_attrs)
     try:
         builder.parse(html)
     except DocTimeBudgetError:
-        raise  # budget blown ≠ markup the stdlib path should retry
+        raise  # a blown budget is a per-doc timeout, not bad markup
     except Exception:
-        return parse_html_stdlib(html, suppress_tags, deny_attrs)
-    return builder.root
-
-
-def parse_html_stdlib(html: str,
-                      suppress_tags: frozenset[str] | None = None,
-                      deny_attrs=None) -> Node:
-    """Reference tokenizer drive (stdlib feed/close) — the executable spec
-    the fast path is tested against; also the fallback."""
-    builder = _DomBuilder(suppress_tags, deny_attrs)
-    try:
-        builder.feed(html)
-        builder.close()
-    except DocTimeBudgetError:
-        raise  # the keep-partial-tree tolerance is for markup, not budget
-    except Exception:
-        # html.parser is highly tolerant already; any residual error keeps
-        # whatever tree was built so far (extraction failures must never kill
-        # the job — mirrors /root/reference/app/main.py:438-441 semantics).
-        try:
-            builder._finalize_text()
-        except Exception:
-            pass
+        builder._finalize_text()  # keep the partial tree; never kill the job
     return builder.root

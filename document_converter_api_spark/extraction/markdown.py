@@ -24,7 +24,6 @@ from .boilerplate import (
     HEADING_TAGS,
     MAIN_TAGS,
     PRUNE_TAGS,
-    anchor_chars,
     collapse_ws,
     deny_attrs,
     keep_block,
@@ -87,22 +86,14 @@ def _inline_one(node: Node) -> str:
     if tag == "code":
         body = inner.strip()
         return f"`{body}`" if body else ""
-    if tag in ("sub", "sup", "span", "small", "u", "s", "abbr", "time",
-               "mark", "cite", "q", "var", "kbd", "samp", "label", "font"):
-        return inner
-    if tag in BLOCK_TAGS or tag in HEADING_TAGS:
-        # Block element nested in an inline context (bad markup): flatten.
-        return inner
+    # Plain inline elements (span, small, …) and block elements nested in
+    # an inline context (bad markup) flatten to their content.
     return inner
 
 
 # ---------------------------------------------------------------------------
 # Block serialization
 # ---------------------------------------------------------------------------
-
-def _plain_len(node: Node) -> int:
-    return len(collapse_ws(node.iter_text()).strip())
-
 
 def _mk_block(kind: str, md: str, node: Node, in_main: bool, level: int = 0) -> Block:
     text, anchors = text_and_anchor_stats(node)
@@ -196,8 +187,13 @@ def _walk_container(node: Node, in_main: bool, blocks: list[Block]) -> None:
         if not pending:
             return
         md = collapse_ws("".join(_inline_one(n) for n in pending)).strip()
-        chars = len(collapse_ws("".join(n.iter_text() for n in pending)).strip())
-        anchors = sum(anchor_chars(n) for n in pending if n.tag is not None)
+        texts: list[str] = []
+        anchors = 0
+        for n in pending:
+            text, n_anchors = text_and_anchor_stats(n)
+            texts.append(text)
+            anchors += n_anchors
+        chars = len(collapse_ws("".join(texts)).strip())
         if md:
             blocks.append(Block("text", md, chars, anchors, in_main))
         pending.clear()
@@ -300,11 +296,9 @@ def html_to_markdown(html: str) -> str:
     # Both boilerplate deny rules — PRUNE_TAGS and the class/id deny-list —
     # are applied during the parse itself: suppressed subtrees keep stack
     # discipline but are never attached and their text never materialized.
-    # Byte-equivalent to build-then-prune, with one INTENTIONAL divergence:
-    # a denied container nested beyond MAX_DEPTH suppresses its children
-    # here, while build-then-prune would flatten them out as siblings at
-    # the cap and keep them — suppression is the correct extraction
-    # behavior (they ARE the boilerplate); pinned in tests.
+    # A denied container nested beyond MAX_DEPTH suppresses its children
+    # too, even though the full tree would flatten them out as siblings at
+    # the cap — they ARE the boilerplate; pinned in tests.
     root = parse_html(html, PRUNE_TAGS, deny_attrs)
     top = root.find_first("body") or root
     blocks: list[Block] = []

@@ -21,9 +21,6 @@ from __future__ import annotations
 import re
 
 CHUNK_SIZE = 1000          # lines/chunk (app/main.py:209)
-CHUNK_THRESHOLD = 10_000   # chunk only if content longer (app/main.py:394)
-MAX_FILE_SIZE = 50 * 1024 * 1024        # app/main.py:205
-LARGE_FILE_THRESHOLD = 5 * 1024 * 1024  # app/main.py:206
 
 
 def format_plain_text(content: str) -> str:

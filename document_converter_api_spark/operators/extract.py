@@ -54,6 +54,9 @@ from ..functions.expressions import (
 # pathological page pins an executor core until the job is killed.
 DOC_TIME_BUDGET_S = 300.0
 
+# Shuffle targets an oversize doc's salt spreads it across (SURVEY.md §4.2.1).
+SALT_BUCKETS = 8
+
 # Output schema of the extraction stage.
 EXTRACT_SCHEMA = StructType(
     [
@@ -153,8 +156,8 @@ def extract_arrow_batches(batches: Iterator[pa.RecordBatch],
 
 def prepare_pages(pages: DataFrame,
                   max_bytes: int = MAX_FILE_SIZE,
-                  num_partitions: int | None = None,
-                  salt_buckets: int = 8) -> tuple[DataFrame, DataFrame]:
+                  num_partitions: int | None = None
+                  ) -> tuple[DataFrame, DataFrame]:
     """Validation + routing + partitioning ahead of extraction.
 
     Returns ``(valid, rejects)``:
@@ -164,7 +167,7 @@ def prepare_pages(pages: DataFrame,
     * deterministic ``partition_id = pmod(xxhash64(url), P)`` — the lineage /
       checkpoint granule (stable across runs, unlike spark_partition_id);
     * ``salt`` from P5's is-large signal plus url hash splits oversize docs
-      across ``salt_buckets`` shuffle targets (SURVEY.md §4.2.1).
+      across ``SALT_BUCKETS`` shuffle targets (SURVEY.md §4.2.1).
     """
     n_parts = num_partitions or pages.sparkSession.sparkContext.defaultParallelism * 4
     typed = pages.withColumn(
@@ -199,7 +202,7 @@ def prepare_pages(pages: DataFrame,
         .withColumn("salt",
                     F.when(is_large_expr(F.col("html")),
                            F.pmod(F.xxhash64(F.col("url"), F.lit(1)),
-                                  F.lit(salt_buckets)))
+                                  F.lit(SALT_BUCKETS)))
                     .otherwise(F.lit(0)).cast("int"))
         .select("url", "html", "lang", "content_type", "partition_id", "salt")
     )
@@ -209,24 +212,19 @@ def prepare_pages(pages: DataFrame,
 def run_extract(valid: DataFrame,
                 shuffle_partitions: int | None = None,
                 max_batch_bytes: int = 64 * 1024 * 1024,
-                pre_shuffle: bool = True,
                 metrics=None,
                 doc_time_budget_s: float | None = DOC_TIME_BUDGET_S
                 ) -> DataFrame:
-    """Run the Arrow stage, optionally behind a salted repartition.
+    """Run the Arrow stage behind a salted repartition.
 
-    ``pre_shuffle=True`` (default) hash-exchanges on (xxhash64(url), salt) —
-    required when downstream commits by partition_id granule (resume
-    pipeline), and measured FASTER even on a balanced corpus (the exchange
-    decouples the scan from the Python stage and evens per-task doc counts;
-    skipping it fused scan+UDF into fewer, skewed tasks and lost ~40%).
-    ``pre_shuffle=False`` exists for pipelines that already partitioned
-    upstream (e.g. bucketed Iceberg writes) where a second exchange would be
-    pure waste."""
+    The hash exchange on (xxhash64(url), salt) is required when downstream
+    commits by partition_id granule (resume pipeline), and measured FASTER
+    even on a balanced corpus (the exchange decouples the scan from the
+    Python stage and evens per-task doc counts; skipping it fused scan+UDF
+    into fewer, skewed tasks and lost ~40%)."""
     spark = valid.sparkSession
     n = shuffle_partitions or spark.sparkContext.defaultParallelism * 4
-    distributed = (valid.repartition(n, F.xxhash64("url"), F.col("salt"))
-                   if pre_shuffle else valid)
+    distributed = valid.repartition(n, F.xxhash64("url"), F.col("salt"))
     fn = lambda it: extract_arrow_batches(  # noqa: E731
         it, max_batch_bytes, doc_time_budget_s)
     if metrics is not None:
@@ -240,12 +238,11 @@ def extract_pipeline(pages: DataFrame,
                      max_bytes: int = MAX_FILE_SIZE,
                      num_partitions: int | None = None,
                      shuffle_partitions: int | None = None,
-                     pre_shuffle: bool = True,
                      metrics=None,
                      doc_time_budget_s: float | None = DOC_TIME_BUDGET_S
                      ) -> tuple[DataFrame, DataFrame]:
     """(results, rejects) — the composed S2/S3/P5 → repartition → U1–U5 flow."""
     valid, rejects = prepare_pages(pages, max_bytes, num_partitions)
-    return (run_extract(valid, shuffle_partitions, pre_shuffle=pre_shuffle,
-                        metrics=metrics, doc_time_budget_s=doc_time_budget_s),
+    return (run_extract(valid, shuffle_partitions, metrics=metrics,
+                        doc_time_budget_s=doc_time_budget_s),
             rejects)

@@ -21,7 +21,6 @@ table P/K times.
 
 from __future__ import annotations
 
-import argparse
 import os
 import time
 
@@ -274,50 +273,3 @@ def postprocess_results(results: DataFrame) -> DataFrame:
         .withColumn("total_chunks", F.size("chunks"))
         .withColumn("content_length", F.length("markdown").cast("long"))
     )
-
-
-def main() -> None:  # pragma: no cover - CLI
-    ap = argparse.ArgumentParser(description="webtext extraction job")
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--partitions", type=int, default=64)
-    ap.add_argument("--partitions-per-commit", type=int, default=16)
-    ap.add_argument("--max-bytes", type=int, default=MAX_FILE_SIZE)
-    ap.add_argument("--cores", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    ap.add_argument("--prepartition-dir", default=None,
-                    help="rewrite the input partitioned by partition_id "
-                         "into this dir first (skipped if its layout "
-                         "marker already exists), then run from it — "
-                         "resume commit groups then prune at the scan")
-    ap.add_argument("--webhook-url", default=os.environ.get("WEBHOOK_URL"),
-                    help="POST per-doc completion notifications here "
-                         "(reference WEBHOOK_URL, app/main.py:215)")
-    args = ap.parse_args()
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .appName("webtext-extract")
-        .config("spark.sql.shuffle.partitions", str(int(args.cores) * 4))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .getOrCreate()
-    )
-    input_path = args.input
-    if args.prepartition_dir:
-        if _prepartitioned_p(args.prepartition_dir) is None:
-            prepartition_pages(spark, args.input, args.prepartition_dir,
-                               num_partitions=args.partitions)
-        input_path = args.prepartition_dir
-    stats = run_extraction_job(
-        spark, input_path, args.output,
-        num_partitions=args.partitions,
-        partitions_per_commit=args.partitions_per_commit,
-        max_bytes=args.max_bytes,
-        webhook_url=args.webhook_url,
-    )
-    import json
-    print(json.dumps(stats))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

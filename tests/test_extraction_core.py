@@ -8,9 +8,14 @@ post-format helpers against hand-computed expectations from
 
 from __future__ import annotations
 
+import pytest
+
 from document_converter_api_spark.extraction.boilerplate import keep_block
 from document_converter_api_spark.extraction.core import extract_document
-from document_converter_api_spark.extraction.html_dom import parse_html
+from document_converter_api_spark.extraction.html_dom import (
+    _DomBuilder,
+    parse_html,
+)
 from document_converter_api_spark.extraction.markdown import html_to_markdown
 from document_converter_api_spark.extraction.pdf import pdf_to_text
 from document_converter_api_spark.extraction.postformat import (
@@ -234,10 +239,38 @@ class TestDispatch:
         assert res.markdown == MAIN
 
 
+def parse_html_stdlib(html: str, suppress_tags=None, deny_attrs=None):
+    """The executable spec of ``parse_html``: html.parser's own feed/close
+    drive over the same builder callbacks. html.parser raises on some
+    malformed declarations (``<![ x]]>``); the tree built up to that token
+    stands."""
+    builder = _DomBuilder(suppress_tags, deny_attrs)
+    try:
+        builder.feed(html)
+        builder.close()
+    except Exception:
+        pass
+    builder._finalize_text()
+    return builder.root
+
+
+def dom_shape(node, out=None) -> list:
+    """Pre-order (tag, attrs) / text / end events of a DOM tree."""
+    out = [] if out is None else out
+    if node.tag is None:
+        out.append(("#t", node.text))
+        return out
+    out.append((node.tag, sorted((node.attrs or {}).items())))
+    for c in node.children:
+        dom_shape(c, out)
+    out.append(("end", node.tag))
+    return out
+
+
 class TestFastTokenizerEquivalence:
-    """The specialized one-shot tokenizer must build the exact same DOM as
-    the stdlib feed/close drive (its executable spec) on representative and
-    pathological inputs; corpus-wide equality was verified at build time."""
+    """The one-shot tokenizer must build the exact same DOM as
+    html.parser's feed/close drive (its executable spec, above) on
+    representative and pathological inputs."""
 
     CASES = [
         "",
@@ -258,31 +291,19 @@ class TestFastTokenizerEquivalence:
         "<p>é entity: &eacute; num: &#233;</p>",
         "<P CLASS='A'>upper</P>",
         "<div/>self-closing-nonvoid</div>",
+        "<p>before</p><![ x]]><p>after</p>",
+        "<p>a</p><![foo[ b ]]><p>c</p>",
+        "<p>a</p><![if !IE]><p>b</p><![endif]>",
     ]
 
-    @staticmethod
-    def _tree(n, out):
-        if n.tag is None:
-            out.append(("#t", n.text))
-            return
-        out.append((n.tag, sorted((n.attrs or {}).items())))
-        for c in n.children:
-            TestFastTokenizerEquivalence._tree(c, out)
-        out.append(("end", n.tag))
-
     def test_cases_equal_stdlib(self):
-        from document_converter_api_spark.extraction.html_dom import (
-            parse_html, parse_html_stdlib)
         for html in self.CASES:
-            a, b = [], []
-            self._tree(parse_html(html), a)
-            self._tree(parse_html_stdlib(html), b)
-            assert a == b, f"tokenizer divergence on {html!r}"
+            assert dom_shape(parse_html(html)) == \
+                dom_shape(parse_html_stdlib(html)), \
+                f"tokenizer divergence on {html!r}"
 
     def test_corpus_sample_equal_stdlib(self, smoke_paths):
         import pyarrow.parquet as pq
-        from document_converter_api_spark.extraction.html_dom import (
-            parse_html, parse_html_stdlib)
         pages, _ = smoke_paths
         t = pq.read_table(pages, columns=["html"])
         for payload in t.column("html").to_pylist()[:200]:
@@ -290,10 +311,22 @@ class TestFastTokenizerEquivalence:
                 s = payload.decode("utf-8")
             except UnicodeDecodeError:
                 s = payload.decode("latin-1")
-            a, b = [], []
-            self._tree(parse_html(s), a)
-            self._tree(parse_html_stdlib(s), b)
-            assert a == b
+            assert dom_shape(parse_html(s)) == dom_shape(parse_html_stdlib(s))
+
+    # html.parser raises mid-document on the first two marked sections;
+    # the tree built before the bad token is the output.
+    @pytest.mark.parametrize("html,want", [
+        ("<html><body><p>before paragraph long enough to keep it</p>"
+         "<![ x]]><p>after paragraph long enough to keep it too</p>"
+         "</body></html>", "before paragraph long enough to keep it"),
+        ("<html><body><main><p>kept</p><![!bogus><p>lost</p></main>"
+         "</body></html>", "kept"),
+        ("<html><body><main><p>a</p><![CDATA[x]]><p>b</p></main>"
+         "</body></html>", "a\n\nb"),
+    ], ids=["unknown_keyword", "no_name_token", "cdata"])
+    def test_bad_marked_section_keeps_partial_tree(self, html, want):
+        res = extract_document(html.encode(), "u.html", "html")
+        assert (res.markdown, res.error) == (want, None)
 
 
 def test_comment_interleaved_text_is_linear_not_quadratic():
@@ -363,26 +396,12 @@ class TestReviewHardening:
     bounded-decompression work."""
 
     def test_truncated_cdata_matches_stdlib(self):
-        from document_converter_api_spark.extraction.html_dom import (
-            parse_html, parse_html_stdlib)
-
-        def tree(n, out):
-            if n.tag is None:
-                out.append(("#t", n.text))
-                return
-            out.append((n.tag, sorted((n.attrs or {}).items())))
-            for c in n.children:
-                tree(c, out)
-            out.append(("/", n.tag))
-
         for case in ("<html><body><script>x</script",
                      "<style>s{}</style ",
                      "<script>a</scrip",
                      "<script>a</script >b"):
-            a, b = [], []
-            tree(parse_html(case), a)
-            tree(parse_html_stdlib(case), b)
-            assert a == b, case
+            assert dom_shape(parse_html(case)) == \
+                dom_shape(parse_html_stdlib(case)), case
 
     def test_self_closing_denied_is_suppressed(self):
         from document_converter_api_spark.extraction.markdown import (
@@ -394,13 +413,20 @@ class TestReviewHardening:
         assert "ad.png" not in md
 
     def test_deep_script_does_not_leak_in_full_tree_mode(self):
-        from document_converter_api_spark.extraction.boilerplate import prune
-        from document_converter_api_spark.extraction.html_dom import parse_html
+        """Beyond MAX_DEPTH a <script> still nests, so its source text
+        sits only inside the script node, never beside it."""
         root = parse_html("<html><body>" + "<div>" * 300
                           + "<script>var secret=1;</script><p>hi</p>"
                           + "</div>" * 300 + "</body></html>")
-        prune(root)
-        assert "secret" not in root.iter_text()
+        holders, stack = [], [root]
+        while stack:
+            n = stack.pop()
+            if n.tag is None:
+                if "secret" in n.text:
+                    holders.append(n.parent.tag)
+            else:
+                stack.extend(n.children)
+        assert holders == ["script"]
 
     def test_truncated_flate_stream_is_skipped(self):
         import zlib

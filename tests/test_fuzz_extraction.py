@@ -7,7 +7,9 @@ since golden byte-identity rests on it. Hypothesis drives three surfaces:
 
 * arbitrary bytes through the sniffing dispatch (any payload, any route);
 * structured-but-pathological HTML (mis-nesting, truncation, entities,
-  attribute garbage) through the DOM builder;
+  attribute garbage, marked sections html.parser raises on) through the
+  DOM builder, which must also build the same tree as html.parser's own
+  feed/close drive (the spec in test_extraction_core);
 * determinism: same input twice → identical output object-wide.
 
 No Spark involved: these pin the pure-Python core the Arrow stage wraps.
@@ -15,10 +17,17 @@ No Spark involved: these pin the pure-Python core the Arrow stage wraps.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from document_converter_api_spark.extraction.boilerplate import (
+    PRUNE_TAGS,
+    deny_attrs,
+)
 from document_converter_api_spark.extraction.core import extract_document
+from document_converter_api_spark.extraction.html_dom import parse_html
+from tests.test_extraction_core import dom_shape, parse_html_stdlib
 
 TAGS = ["p", "div", "h1", "h2", "li", "ul", "ol", "em", "strong", "a",
         "span", "table", "tr", "td", "script", "style", "nav", "footer",
@@ -48,7 +57,9 @@ def html_soup(draw) -> str:
         elif kind == 3:
             parts.append(draw(st.sampled_from(
                 ["&amp;", "&lt;", "&nbsp;", "&#65;", "&#x1F600;", "&bogus;",
-                 "&", "<!--", "-->", "<!-- comment -->"])))
+                 "&", "<!--", "-->", "<!-- comment -->", "<![ x",
+                 "<![ x]]>", "<![foo[", "<![CDATA[raw]]>", "<!doctype html>",
+                 "<?pi?>", "</ bogus>"])))
         elif kind == 4:
             parts.append(f"<{tag}/>")
         else:
@@ -75,6 +86,18 @@ def test_pathological_html_never_raises_and_is_deterministic(soup):
     assert isinstance(res.markdown, str)
     res2 = extract_document(payload, "https://fuzz.example/p.html", "html")
     assert res.markdown == res2.markdown
+
+
+@pytest.mark.parametrize("suppress", [False, True],
+                         ids=["full_tree", "suppressed"])
+@settings(max_examples=150, deadline=None)
+@given(html_soup())
+def test_parse_html_equals_stdlib_drive(suppress, soup):
+    """One drive in production, html.parser's feed/close drive as the
+    spec: same tree, including after html.parser raises mid-document."""
+    args = (PRUNE_TAGS, deny_attrs) if suppress else ()
+    assert dom_shape(parse_html(soup, *args)) == \
+        dom_shape(parse_html_stdlib(soup, *args))
 
 
 @settings(max_examples=80, deadline=None)

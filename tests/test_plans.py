@@ -55,15 +55,6 @@ def test_extract_pipeline_has_single_exchange_before_arrow(spark):
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan or "PythonMapInArrow" in plan
 
 
-def test_extract_no_pre_shuffle_has_zero_exchange(spark):
-    from document_converter_api_spark.operators.extract import (
-        prepare_pages, run_extract)
-    pages = spark.read.parquet(PAGES_SMOKE)
-    valid, _ = prepare_pages(pages, num_partitions=8)
-    plan = plan_of(run_extract(valid, pre_shuffle=False))
-    assert n_exchanges(plan) == 0, "bucketed input → no shuffle at all"
-
-
 def test_point_lookup_broadcasts(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["point_lookup"](spark, SF))
